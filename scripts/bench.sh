@@ -15,6 +15,8 @@ set -u
 cd "$(dirname "$0")/.."
 OUT="${SPARK_GRAFT_BENCH_OUT:-bench_result.json}"
 LOG="${SPARK_GRAFT_BENCH_LOG:-/tmp/graft-bench-sbt.log}"
+# a failed run must never print a stale artifact from an earlier run
+rm -f "$OUT"
 sbt "runMain graft.Bench" >"$LOG" 2>&1
 rc=$?
 if [ -f "$OUT" ]; then

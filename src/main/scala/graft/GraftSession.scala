@@ -153,29 +153,29 @@ object Tables {
     * metastore). Metadata only — no result caching: each query still
     * reads every byte from parquet.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
+  private[graft] val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.types.StructType)]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // r18 (ADVICE r17): key the cache on (path, directory mtime) so a
-    // rewritten table (test-data regeneration within one JVM) re-infers
-    // instead of silently reading with a stale schema. One FS stat call
-    // (~µs) versus the ~30-50 ms footer-inference job the cache avoids;
-    // an unreadable status (exotic FS) falls back to uncached inference.
+    // r18 (ADVICE r17): each path's entry carries the directory mtime it
+    // was inferred at, so a rewritten table (test-data regeneration within
+    // one JVM) re-infers and REPLACES its entry instead of silently reading
+    // with a stale schema. One FS stat call (~µs) versus the ~30-50 ms
+    // footer-inference job the cache avoids; an unreadable status (exotic
+    // FS) falls back to uncached inference.
     val mtime =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getFileStatus(p).getModificationTime
       } catch { case _: Exception => -1L }
-    val key = (path, mtime)
-    val cached = if (mtime >= 0) schemaCache.get(key) else null
+    val cached = if (mtime >= 0) schemaCache.get(path) else null
     val df =
-      if (cached != null) spark.read.schema(cached).parquet(path)
+      if (cached != null && cached._1 == mtime) spark.read.schema(cached._2).parquet(path)
       else {
         val d = spark.read.parquet(path)
-        if (mtime >= 0) schemaCache.put(key, d.schema)
+        if (mtime >= 0) schemaCache.put(path, (mtime, d.schema))
         d
       }
     if (name == "events") normalizeEvents(df) else df

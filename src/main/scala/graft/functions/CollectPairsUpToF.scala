@@ -2,93 +2,43 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Bounded PAIRED collect — the (key, value) sibling of [[CollectUpToF]]:
-  * gathers the group's (left, right) long pairs into an
-  * array<struct<k, v>>, stopping at `cap + 1` entries, so per-key
-  * aggregation state is hard-bounded at (cap+1) × 16 bytes however hot
-  * the key. A group that kept ≤ cap entries is COMPLETE by construction —
-  * the property the TF-IDF postings design relies on: a term whose
-  * document-frequency survives the df cap carries its full (doc, tf)
-  * postings list; an overflowed list proves df > cap and is dropped.
-  * Buffer layout is one interleaved long array (k0,v0,k1,v1,…).
+  * gathers the group's (left, right) pairs into an array<struct<k, v>>,
+  * stopping at `cap + 1` entries, so per-key aggregation state is
+  * hard-bounded however hot the key. A group that kept ≤ cap entries is
+  * COMPLETE by construction — the property the TF-IDF postings design
+  * relies on: a term whose document-frequency survives the df cap carries
+  * its full (doc, tf) postings list; an overflowed list proves df > cap and
+  * is dropped. `k` is any orderable type (a document id), `v` a bigint; a
+  * row with either side null is skipped.
   */
 case class CollectPairsUpToF(left: Expression, right: Expression, cap: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[LongsUpTo] with BinaryLike[Expression] {
+    extends BoundedCollect with BinaryLike[Expression] {
   require(cap >= 0 && cap < (Int.MaxValue / 2) - 1, s"bad cap $cap")
-  private val maxLongs = (cap + 1) * 2
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"collect_pairs_up_to requires (bigint, bigint), got ($l, $r)")
-    }
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("v", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
+    if (RowOrdering.isOrderable(left.dataType) && right.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"collect_pairs_up_to requires (orderable, bigint), got (${left.dataType}, ${right.dataType})")
 
-  override def createAggregationBuffer(): LongsUpTo =
-    new LongsUpTo(new Array[Long](16), 0)
+  override protected def elementType: DataType = StructType(Seq(
+    StructField("k", left.dataType, nullable = false),
+    StructField("v", LongType, nullable = false)))
 
-  override def update(b: LongsUpTo, input: InternalRow): LongsUpTo = {
-    if (b.used < maxLongs) {
-      val k = left.eval(input)
+  override protected def element(input: InternalRow): Any = {
+    val k = left.eval(input)
+    if (k == null) null
+    else {
       val v = right.eval(input)
-      if (k != null && v != null) {
-        // add both or neither (cap is in ENTRIES; maxLongs is even)
-        b.add(k.asInstanceOf[Long], maxLongs - 1)
-        b.add(v.asInstanceOf[Long], maxLongs - 1)
-      }
+      if (v == null) null
+      else new GenericInternalRow(Array[Any](InternalRow.copyValue(k), v))
     }
-    b
-  }
-
-  override def merge(b: LongsUpTo, other: LongsUpTo): LongsUpTo = {
-    var i = 0
-    while (i + 1 < other.used && b.used < maxLongs) {
-      b.add(other.data(i), maxLongs - 1)
-      b.add(other.data(i + 1), maxLongs - 1)
-      i += 2
-    }
-    b
-  }
-
-  override def eval(b: LongsUpTo): Any = {
-    val n = b.used / 2
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) = new GenericInternalRow(Array[Any](b.data(2 * i), b.data(2 * i + 1)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(b: LongsUpTo): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * b.used)
-    bb.putInt(b.used)
-    var i = 0
-    while (i < b.used) { bb.putLong(b.data(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): LongsUpTo = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val data = new Array[Long](math.max(16, n))
-    var i = 0
-    while (i < n) { data(i) = bb.getLong; i += 1 }
-    new LongsUpTo(data, n)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CollectPairsUpToF =

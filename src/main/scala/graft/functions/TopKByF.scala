@@ -3,32 +3,38 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructField, StructType}
 
 /** Bounded top-k state for [[TopKByF]]: a binary MIN-heap of (score, id)
-  * ordered by (score asc, id desc) — the root is the WORST kept entry, so
-  * a better candidate replaces it in O(log k). Never holds more than k
+  * Catalyst values under the rank order — the root is the WORST kept entry,
+  * so a better candidate replaces it in O(log k). Never holds more than k
   * entries regardless of group size.
   */
-final class TopKHeap(val k: Int) {
-  val scores = new Array[Double](k)
-  val ids = new Array[Long](k)
+final class TopKHeap(val k: Int, idOrdering: Ordering[Any]) {
+  val scores = new Array[Any](k) // boxed Double, or null
+  val ids = new Array[Any](k)
   var size = 0
 
-  /** Spark SQL double semantics (SQLOrderingUtil): -0.0 == 0.0, NaN ==
-    * NaN, NaN greater than everything. The window this replaces ordered by
-    * (score DESC, id ASC); `better(a, b)` is true iff a ranks strictly
-    * before b under that order.
+  /** True iff (s1, i1) ranks strictly before (s2, i2) under (score DESC
+    * NULLS LAST, id ASC): Spark SQL double semantics for the score
+    * (SQLOrderingUtil: -0.0 == 0.0, NaN == NaN, NaN greater than
+    * everything), the id type's SQL ordering for the id.
     */
-  @inline private def cmpScore(x: Double, y: Double): Int =
-    if (x < y) -1 else if (x > y) 1 else if (x == y) 0
-    else java.lang.Double.compare(x, y) // NaN handling, matches Spark
-  @inline def better(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val c = cmpScore(s1, s2)
-    c > 0 || (c == 0 && i1 < i2)
+  def better(s1: Any, i1: Any, s2: Any, i2: Any): Boolean = {
+    val c =
+      if (s1 == null) { if (s2 == null) 0 else -1 }
+      else if (s2 == null) 1
+      else SQLOrderingUtil.compareDoubles(s1.asInstanceOf[Double], s2.asInstanceOf[Double])
+    c > 0 || (c == 0 && idOrdering.lt(i1, i2))
+  }
+
+  private def swap(a: Int, b: Int): Unit = {
+    val ts = scores(a); val ti = ids(a)
+    scores(a) = scores(b); ids(a) = ids(b)
+    scores(b) = ts; ids(b) = ti
   }
 
   private def siftDown(pos0: Int): Unit = {
@@ -37,68 +43,63 @@ final class TopKHeap(val k: Int) {
       val l = 2 * pos + 1
       val r = l + 1
       var worst = pos
-      // min-heap on the (score desc, id asc) rank ⇒ parent is WORSE
-      // (ranks after) than children: child worse than current ⇒ swap
+      // parent is WORSE (ranks after) than its children: a child worse
+      // than the current slot swaps up
       if (l < size && better(scores(worst), ids(worst), scores(l), ids(l))) worst = l
       if (r < size && better(scores(worst), ids(worst), scores(r), ids(r))) worst = r
       if (worst == pos) return
-      val ts = scores(pos); val ti = ids(pos)
-      scores(pos) = scores(worst); ids(pos) = ids(worst)
-      scores(worst) = ts; ids(worst) = ti
+      swap(pos, worst)
       pos = worst
     }
   }
 
-  def add(score: Double, id: Long): Unit = {
+  /** Offer one entry; the id is copied only if it is kept. */
+  def add(score: Any, id: Any): Unit = {
     if (size < k) {
-      // sift up
       var pos = size
-      scores(pos) = score; ids(pos) = id
+      scores(pos) = score; ids(pos) = InternalRow.copyValue(id)
       size += 1
-      while (pos > 0) {
+      while (pos > 0) { // sift up: parent must be worse-or-equal than child
         val parent = (pos - 1) / 2
-        // parent must be worse-or-equal than child
         if (better(scores(parent), ids(parent), scores(pos), ids(pos))) {
-          val ts = scores(pos); val ti = ids(pos)
-          scores(pos) = scores(parent); ids(pos) = ids(parent)
-          scores(parent) = ts; ids(parent) = ti
+          swap(pos, parent)
           pos = parent
         } else return
       }
     } else if (k > 0 && better(score, id, scores(0), ids(0))) {
-      scores(0) = score; ids(0) = id
+      scores(0) = score; ids(0) = InternalRow.copyValue(id)
       siftDown(0)
     }
   }
 
-  /** Entries in rank order (score desc, id asc) — rank = index + 1. */
-  def sorted(): Array[(Double, Long)] = {
-    val out = Array.tabulate(size)(i => (scores(i), ids(i)))
-    out.sortWith { case ((s1, i1), (s2, i2)) => better(s1, i1, s2, i2) }
-  }
+  /** Heap slots in rank order — rank = index + 1. */
+  def sortedSlots(): Array[Int] =
+    Array.range(0, size).sortWith((a, b) => better(scores(a), ids(a), scores(b), ids(b)))
 }
 
 /** Bounded per-group top-k aggregate (r18, guide §2.3 "aggregate before
-  * you shuffle"): keeps the k best (score, id) pairs under the order
-  * (score DESC, id ASC) and returns them rank-ordered as
-  * array<struct<id, score>>.
+  * you shuffle"): keeps the k best (score, id) pairs and returns them
+  * rank-ordered as array<struct<id, score>>, generic over the id type.
   *
-  * Replaces the `row_number().over(partitionBy(group).orderBy(score desc,
-  * id)) <= k` pattern in the ANN scans. The window form — even with
-  * Spark's WindowGroupLimit partial top-k — LOCALLY SORTS every candidate
-  * row (O(n log n) over corpus×queries rows: 34 executor-seconds of
-  * q_ann_pq's ADC stage at sf1 were this sort); the aggregate form keeps
-  * O(groups × k) state, does O(n log k) heap work with map-side partials,
-  * and ships only k rows per group per task. Value-identical: (score, id)
-  * is a STRICT total order whenever ids are unique within a group — the
-  * ANN pipelines' invariant — so "rows with row_number ≤ k" and "the k
-  * heap-best" are the same set in the same order; double comparison
-  * follows Spark's SQL semantics (-0.0 == 0.0, NaN greatest) and a NULL
-  * score ranks after every non-null score (window DESC NULLS LAST) with
-  * id-ascending among nulls, encoded as -∞ (cosines are ≥ -1, no
-  * collision). NULL ids are skipped — a null-id row never survives the
-  * downstream id-equality rerank join anyway. R18OptSpec pins aggregate ≡
-  * window on adversarial data (ties, -0.0, duplicates).
+  * Semantics — exactly the rows `row_number().over(partitionBy(group)
+  * .orderBy(score DESC NULLS LAST, id ASC)) <= k` keeps, in that order,
+  * whenever ids are unique within a group (the ANN pipelines' invariant,
+  * which makes (score, id) a STRICT total order):
+  *   - rows with a NULL id are skipped;
+  *   - a NULL score ranks after every non-null score and is returned NULL;
+  *   - doubles compare like Spark SQL: -0.0 ties with 0.0, NaN ranks first;
+  *   - ties break on the id ascending under the id type's SQL ordering
+  *     (`TypeUtils.getInterpretedOrdering` — UTF-8 byte order for strings).
+  * The id may be any type `RowOrdering.isOrderable` accepts.
+  *
+  * Why not the window: even with Spark's WindowGroupLimit partial top-k it
+  * LOCALLY SORTS every candidate row (O(n log n) over corpus×queries rows:
+  * 34 executor-seconds of q_ann_pq's ADC stage at sf1 were this sort); the
+  * aggregate keeps O(groups × k) state, does O(n log k) heap work with
+  * map-side partials, and ships only k rows per group per task. Ids are
+  * Catalyst values copied with `InternalRow.copyValue`, and the buffer
+  * serializes through an `UnsafeProjection` of the result type, as Spark's
+  * `aggregate.Collect` does.
   */
 case class TopKByF(left: Expression, right: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -106,32 +107,25 @@ case class TopKByF(left: Expression, right: Expression, k: Int,
   require(k > 0 && k < 10000000, s"bad k $k")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"top_k_by requires (double score, bigint id), got ($l, $r)")
-    }
+    if (left.dataType == DoubleType && RowOrdering.isOrderable(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"top_k_by requires (double score, orderable id), got (${left.dataType}, ${right.dataType})")
   override def dataType: DataType = ArrayType(
     StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false))),
+      StructField("id", right.dataType, nullable = false),
+      StructField("score", DoubleType, nullable = true))),
     containsNull = false)
   override def nullable: Boolean = false
 
-  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
+  @transient private lazy val idOrdering = TypeUtils.getInterpretedOrdering(right.dataType)
+  @transient private lazy val projection = UnsafeProjection.create(Array[DataType](dataType))
+
+  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k, idOrdering)
 
   override def update(b: TopKHeap, input: InternalRow): TopKHeap = {
     val id = right.eval(input)
-    if (id != null) {
-      val s = left.eval(input)
-      val score =
-        if (s == null) Double.NegativeInfinity
-        else {
-          val d = s.asInstanceOf[Double]
-          if (d == 0.0) 0.0 else d // normalize -0.0 like Spark's ordering
-        }
-      b.add(score, id.asInstanceOf[Long])
-    }
+    if (id != null) b.add(left.eval(input), id)
     b
   }
 
@@ -141,33 +135,22 @@ case class TopKByF(left: Expression, right: Expression, k: Int,
     b
   }
 
-  override def eval(b: TopKHeap): Any = {
-    val entries = b.sorted()
-    val out = new Array[Any](entries.length)
-    var i = 0
-    while (i < entries.length) {
-      out(i) = new GenericInternalRow(Array[Any](entries(i)._2, entries(i)._1))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def eval(b: TopKHeap): Any =
+    new GenericArrayData(b.sortedSlots().map(i =>
+      new GenericInternalRow(Array[Any](b.ids(i), b.scores(i)))))
 
-  override def serialize(b: TopKHeap): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 16 * b.size)
-    bb.putInt(b.size)
-    var i = 0
-    while (i < b.size) { bb.putDouble(b.scores(i)); bb.putLong(b.ids(i)); i += 1 }
-    bb.array()
-  }
+  override def serialize(b: TopKHeap): Array[Byte] =
+    projection(InternalRow(eval(b))).getBytes
 
   override def deserialize(bytes: Array[Byte]): TopKHeap = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val h = new TopKHeap(k)
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val h = createAggregationBuffer()
+    val entries = row.getArray(0)
     var i = 0
-    while (i < n) {
-      val s = bb.getDouble; val id = bb.getLong
-      h.add(s, id)
+    while (i < entries.numElements()) {
+      val e = entries.getStruct(i, 2)
+      h.add(if (e.isNullAt(1)) null else e.getDouble(1), e.get(0, right.dataType))
       i += 1
     }
     h

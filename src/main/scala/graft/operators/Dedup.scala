@@ -32,7 +32,7 @@ object Dedup {
     val tap = planTap
     // advisory only (ADVICE r17): a dev-tap failure must never propagate
     // into a production dedup pipeline
-    if (tap != null) try tap(result) catch { case _: Throwable => () }
+    if (tap != null) try tap(result) catch { case scala.util.control.NonFatal(_) => () }
     val out = result.localCheckpoint(true)
     pinned.foreach(_.unpersist())
     out
@@ -182,33 +182,17 @@ object Dedup {
     // bucket, so a degenerate bucket holds KBs of state, never GBs) and
     // candidate pairs stream out of a double explode — one exchange where
     // the previous count-filter-join-back + self-join paid three (the
-    // ngramJaccardPairs postings redesign applied to LSH banding; results
-    // identical, DedupSpec + the quality oracles pin it). Non-long doc
-    // ids keep the join-based shape.
-    val rawPairs = (if (sigArr.schema("doc").dataType ==
-        org.apache.spark.sql.types.LongType) {
-      val ok = banded.groupBy(col("band"), col("band_hash"))
-        .agg(org.apache.spark.sql.GraftShim.column(
-          graft.functions.CollectUpToF(
-            org.apache.spark.sql.GraftShim.expression(col("doc")), maxBucket)
-            .toAggregateExpression()).as("docs"))
-        .filter(size(col("docs")) <= maxBucket)
-        .select("docs")
-      ok.select(col("docs"), explode(col("docs")).as("doc_a"))
-        .select(col("doc_a"), explode(col("docs")).as("doc_b"))
-        .filter(col("doc_a") < col("doc_b"))
-    } else {
-      val okBuckets = banded.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("bn"))
-        .filter(col("bn") <= maxBucket)
-        .select(col("band"), col("band_hash"))
-      val buckets = banded.join(okBuckets, Seq("band", "band_hash"))
-      buckets.as("a").join(buckets.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.band_hash") === col("b.band_hash") &&
-            col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-    }).dropDuplicates("doc_a", "doc_b")
+    // ngramJaccardPairs postings redesign applied to LSH banding).
+    val rawPairs = banded.groupBy(col("band"), col("band_hash"))
+      .agg(org.apache.spark.sql.GraftShim.column(
+        graft.functions.CollectUpToF(
+          org.apache.spark.sql.GraftShim.expression(col("doc")), maxBucket)
+          .toAggregateExpression()).as("docs"))
+      .filter(size(col("docs")) <= maxBucket)
+      .select(col("docs"), explode(col("docs")).as("doc_a"))
+      .select(col("doc_a"), explode(col("docs")).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .dropDuplicates("doc_a", "doc_b")
 
     val scored = rawPairs
       .join(sigArr.select(col("doc").as("doc_a"), col("sig").as("sig_a")), "doc_a")
@@ -594,23 +578,20 @@ object Dedup {
     // threshold-surviving candidate pairs), and the distributed fixpoint
     // pays ~4 shuffle barriers per round regardless of size — measured
     // 10s of pure scheduling latency for a 1 071-edge graph at sf0.1.
-    // Up to `maxDriverEdges` (64 MB of longs at the 4M default) the
-    // component minima are computed exactly in milliseconds on the driver
-    // and rejoined as a broadcast; past the budget — or for non-integral
-    // ids — the distributed path below takes over unchanged. Both paths
-    // produce the identical (doc → min reachable id) assignment
-    // (DedupSpec asserts equality).
-    val longIds = pairs.schema.take(2).forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
+    // Up to `maxDriverEdges` edges the component minima are computed
+    // exactly in milliseconds on the driver ([[driverLabels]]) and rejoined
+    // as a broadcast; past the budget the distributed path below takes
+    // over. Both paths produce the identical (doc → min reachable id)
+    // assignment for every id type (DedupSpec asserts equality).
     val probeN = math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt
     // ONE pass, ONE job over the (possibly expensive — LSH joins) pair
     // pipeline: collect the limit(budget+1) frame directly and decide from
     // its length (r17 — the previous persist+count+collect shape read the
     // cache twice, paying a second job's scheduling latency per keeper
     // call). Driver footprint is bounded either way: at most probeN
-    // two-long rows (~90 B each ⇒ ≲400 MB transient at the 4M default)
-    // live exactly until the length check, and only when the graph
-    // overflows the budget — in which case they are dropped and the
+    // two-id rows (~90 B each for bigint ⇒ ≲400 MB transient at the 4M
+    // default) live exactly until the length check, and only when the
+    // graph overflows the budget — in which case they are dropped and the
     // distributed path recomputes from `pairs`, same as before.
     // r18 (ADVICE r17): probe CHEAPLY before shipping a potentially
     // ~400 MB boxed edge set to the driver. The first collect is capped at
@@ -621,50 +602,28 @@ object Dedup {
     // overflows the small probe pays a persist + bounded count, and the
     // full collect happens only once the count has PROVEN the set fits the
     // budget — the driver never holds an over-budget edge set.
+    val idType = pairs.schema("doc_a").dataType
+    val slim = pairs.select(col("doc_a"), col("doc_b").cast(idType))
+    val firstN = math.min(262145L, probeN.toLong).toInt
+    val first = slim.limit(firstN).collect()
     val probed: Option[Array[org.apache.spark.sql.Row]] =
-      if (!longIds) None
+      if (first.length < firstN) {
+        if (first.length <= maxDriverEdges) Some(first) else None
+      } else if (first.length > maxDriverEdges) None
       else {
-        val slim = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        val firstN = math.min(262145L, probeN.toLong).toInt
-        val first = slim.limit(firstN).collect()
-        if (first.length < firstN) {
-          if (first.length <= maxDriverEdges) Some(first) else None
-        } else if (first.length > maxDriverEdges) None
-        else {
-          // ambiguous: the small probe filled up — count (bounded by the
-          // limit) against a persisted pair pipeline, collect only if it fits
-          val p = slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val n = p.limit(probeN).count()
-            if (n <= maxDriverEdges) Some(p.limit(probeN).collect()) else None
-          } finally p.unpersist()
-        }
+        // ambiguous: the small probe filled up — count (bounded by the
+        // limit) against a persisted pair pipeline, collect only if it fits
+        val p = slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = p.limit(probeN).count()
+          if (n <= maxDriverEdges) Some(p.limit(probeN).collect()) else None
+        } finally p.unpersist()
       }
     if (probed.isDefined) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
-        }
-        r
-      }
-      probed.get.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { // min id becomes the root → component min for free
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-      val spark = df.sparkSession
-      import spark.implicits._
-      val labels = scala.jdk.CollectionConverters.SetHasAsScala(parent.keySet())
-        .asScala.toSeq.map(x => (x, find(x))).toDF("doc_l", "keep_l")
+      val labels = driverLabels(df.sparkSession, probed.get, idType)
       return df.select(col(idCol).as("doc"))
-        .join(broadcast(labels), col("doc").cast("long") === col("doc_l"), "left")
-        .select(col("doc"), coalesce(col("keep_l"), col("doc").cast("long")).as("keep_as"))
+        .join(broadcast(labels), col("doc") === col("doc_l"), "left")
+        .select(col("doc"), coalesce(col("keep_l"), col("doc")).as("keep_as"))
     }
 
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -718,6 +677,47 @@ object Dedup {
     materializeAndRelease(resolved, labels)
   }
 
+  /** (doc_l, keep_l): every endpoint of a driver-resident edge list mapped
+    * to the minimum id of its connected component. Ids are Catalyst values
+    * compared under the id type's SQL ordering — the one `min`/`least` use
+    * on the distributed path (Java's String.compareTo orders UTF-16 code
+    * units and disagrees with Spark's UTF-8 byte order on supplementary
+    * characters). The distinct endpoints are sorted once and union-find
+    * runs over their positions, so the smaller position becomes the root
+    * and every root is its component's minimum. Edges with a null
+    * endpoint link nothing, as on the distributed path.
+    */
+  private def driverLabels(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val live = edges.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (toCatalyst(r.get(0)), toCatalyst(r.get(1))))
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    live.flatMap { case (a, b) => Array(a, b) }.sorted(ord)
+      .foreach(v => if (ids.isEmpty || !ord.equiv(ids.last, v)) ids += v)
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    live.foreach { case (a, b) =>
+      val ra = find(ids.search(a)(ord).insertionPoint)
+      val rb = find(ids.search(b)(ord).insertionPoint)
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = ids.indices.map(i =>
+      org.apache.spark.sql.Row(toScala(ids(i)), toScala(ids(find(i)))))
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
+      StructType(Seq(StructField("doc_l", idType, nullable = false),
+        StructField("keep_l", idType, nullable = false))))
+  }
+
   /** Exact n-gram Jaccard similarity via a POSTINGS-LIST inverted index
     * (r17 redesign, guide §2.3/§2.4): ONE corpus traversal groups the
     * (doc, shingle) pairs by shingle into a CAP-BOUNDED postings list
@@ -736,8 +736,7 @@ object Dedup {
     * vocab- and output-bounded rows). The Σ df² pair-emit cost and the
     * cap semantics are unchanged: Jaccard is computed over the surviving
     * shingles on both sides of the ratio, so the metric stays internally
-    * consistent under the cap. Non-long doc ids keep the join-based
-    * fallback (value-identical; DedupSpec pins the two paths equal).
+    * consistent under the cap.
     */
   def ngramJaccardPairs(
       df: DataFrame,
@@ -746,43 +745,24 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.5,
       maxDocFreq: Int = 1000): DataFrame = {
-    val sh = shingles(df, idCol, textCol, shingleSize)
-    val (sizes, inter, pinned) =
-      if (sh.schema("doc").dataType == org.apache.spark.sql.types.LongType) {
-        // postings per shingle; only complete (≤ cap) lists survive.
-        // persisted: feeds per-doc sizes and the pair expansion; vocab ×
-        // ≤cap longs — orders of magnitude under the exploded corpus form
-        val ok = sh.groupBy("shingle")
-          .agg(org.apache.spark.sql.GraftShim.column(
-            graft.functions.CollectUpToF(
-              org.apache.spark.sql.GraftShim.expression(col("doc")), maxDocFreq)
-              .toAggregateExpression()).as("docs"))
-          .filter(size(col("docs")) <= maxDocFreq)
-          .select("docs")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sizes = ok.select(explode(col("docs")).as("doc"))
-          .groupBy("doc").agg(count(lit(1)).as("n_sh"))
-        val inter = ok.select(col("docs"), explode(col("docs")).as("doc_a"))
-          .select(col("doc_a"), explode(col("docs")).as("doc_b"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-        (sizes, inter, ok)
-      } else {
-        val okShingles = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDocFreq)
-          .select("shingle")
-        // persisted: feeds per-doc sizes and both sides of the self-join
-        val filtered = sh.join(okShingles, "shingle")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sizes = filtered.groupBy("doc").agg(count(lit(1)).as("n_sh"))
-        val inter = filtered.as("x").join(filtered.as("y"),
-            col("x.shingle") === col("y.shingle") && col("x.doc") < col("y.doc"))
-          .groupBy(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-        (sizes, inter, filtered)
-      }
-
+    // postings per shingle; only complete (≤ cap) lists survive.
+    // persisted: feeds per-doc sizes and the pair expansion; vocab × ≤cap
+    // ids — orders of magnitude under the exploded corpus form
+    val ok = shingles(df, idCol, textCol, shingleSize).groupBy("shingle")
+      .agg(org.apache.spark.sql.GraftShim.column(
+        graft.functions.CollectUpToF(
+          org.apache.spark.sql.GraftShim.expression(col("doc")), maxDocFreq)
+          .toAggregateExpression()).as("docs"))
+      .filter(size(col("docs")) <= maxDocFreq)
+      .select("docs")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = ok.select(explode(col("docs")).as("doc"))
+      .groupBy("doc").agg(count(lit(1)).as("n_sh"))
+    val inter = ok.select(col("docs"), explode(col("docs")).as("doc_a"))
+      .select(col("doc_a"), explode(col("docs")).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("inter"))
     val scored = inter
       .join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "size_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "size_b"), "doc_b")
@@ -790,7 +770,7 @@ object Dedup {
         col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    materializeAndRelease(scored, pinned)
+    materializeAndRelease(scored, ok)
   }
 
   /** TF-IDF weighted cosine near-dup pairs — the frequency-aware sibling of
@@ -850,67 +830,46 @@ object Dedup {
           org.apache.spark.sql.GraftShim.expression(tokens(col(textCol)))))).as("e"))
       .select(col("doc"), col("e.term_h").as("term_h"), col("e.tf").as("tf"))
     val dec = DecimalType(38, 0)
+    // the collect cap is the absolute df cap clamped to the aggregate's
+    // range (~2³⁰ entries): a term past the clamp drops where an exact df
+    // count would keep it, but no input that could finish that term's
+    // Σ df² pair expansion reaches it (the simhashPairs argument)
+    val absCap = math.max(1L, math.min(maxDocFreqAbs, (Int.MaxValue / 2) - 2L))
     val effCap = greatest(lit(1L),
-      least(ceil(lit(maxDocFreqRatio) * col("n_docs")), lit(maxDocFreqAbs)))
-    val (norms, dots, pinned) =
-      if (df.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
-          maxDocFreqAbs <= (Int.MaxValue / 2) - 2) {
-        // POSTINGS path (r17, the ngramJaccardPairs design): ONE corpus
-        // exchange gathers each term's (doc, tf) postings with hard-capped
-        // state ([[graft.functions.CollectPairsUpToF]], ≤ maxDocFreqAbs+1
-        // entries/term); a list that stayed ≤ the abs cap is COMPLETE, so
-        // df = size(postings) and the dual relative+absolute cap applies
-        // exactly. idf attaches ROW-LOCALLY (df is the list size; N rides
-        // as the broadcast totals), norms explode the postings, and dots
-        // stream out of a double explode — the idf join and the w
-        // self-join (both corpus-sized exchanges) disappear, as does the
-        // corpus-sized `w` persist: the pinned frame is vocab × ≤cap
-        // entries. Values are bit-identical: same df filter, same idf6
-        // rounding, w = tf·idf6 in long, decimal dot/norm sums.
-        val posted = tf.groupBy("term_h")
-          .agg(org.apache.spark.sql.GraftShim.column(
-            graft.functions.CollectPairsUpToF(
-              org.apache.spark.sql.GraftShim.expression(col("doc")),
-              org.apache.spark.sql.GraftShim.expression(col("tf")),
-              maxDocFreqAbs.toInt).toAggregateExpression()).as("ps"))
-          .crossJoin(broadcast(totals))
-          .filter(size(col("ps")).cast("long") <= effCap)
-          .select(col("ps"),
-            round(log(col("n_docs").cast("double") / size(col("ps"))) * 1e6)
-              .cast("long").as("idf6"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val norms = posted
-          .select(explode(col("ps")).as("e"), col("idf6"))
-          .select(col("e.k").as("doc"), (col("e.v") * col("idf6")).as("w"))
-          .groupBy("doc").agg(sum(col("w").cast(dec) * col("w")).as("n2"))
-        val dots = posted
-          .select(col("ps"), col("idf6"), explode(col("ps")).as("a"))
-          .select(col("a"), col("idf6"), explode(col("ps")).as("b"))
-          .filter(col("a.k") < col("b.k"))
-          .groupBy(col("a.k").as("doc_a"), col("b.k").as("doc_b"))
-          .agg(sum((col("a.v") * col("idf6")).cast(dec) *
-            (col("b.v") * col("idf6"))).as("dot"))
-        (norms, dots, posted)
-      } else {
-        // df from the tf table (one row per doc×term already): vocab-bounded
-        val idf = tf.groupBy("term_h").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(totals))
-          .filter(col("df") <= effCap)
-          .select(col("term_h"),
-            round(log(col("n_docs").cast("double") / col("df")) * 1e6)
-              .cast("long").as("idf6"))
-        // persisted: feeds norms and both sides of the self-join
-        val w = tf.join(idf, "term_h")
-          .select(col("doc"), col("term_h"), (col("tf") * col("idf6")).as("w"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val norms = w.groupBy("doc")
-          .agg(sum(col("w").cast(dec) * col("w")).as("n2"))
-        val dots = w.as("a").join(w.as("b"),
-            col("a.term_h") === col("b.term_h") && col("a.doc") < col("b.doc"))
-          .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-          .agg(sum(col("a.w").cast(dec) * col("b.w")).as("dot"))
-        (norms, dots, w)
-      }
+      least(ceil(lit(maxDocFreqRatio) * col("n_docs")), lit(absCap)))
+    // POSTINGS (r17, the ngramJaccardPairs design): ONE corpus exchange
+    // gathers each term's (doc, tf) postings with hard-capped state
+    // ([[graft.functions.CollectPairsUpToF]], ≤ absCap+1 entries/term); a
+    // list that stayed ≤ the cap is COMPLETE, so df = size(postings) and
+    // the dual relative+absolute cap applies exactly. idf attaches
+    // ROW-LOCALLY (df is the list size; N rides as the broadcast totals),
+    // norms explode the postings, and dots stream out of a double explode
+    // — no idf join and no w self-join (both corpus-sized exchanges), and
+    // the pinned frame is vocab × ≤cap entries. Same df filter, same idf6
+    // rounding, w = tf·idf6 in long, decimal dot/norm sums.
+    val posted = tf.groupBy("term_h")
+      .agg(org.apache.spark.sql.GraftShim.column(
+        graft.functions.CollectPairsUpToF(
+          org.apache.spark.sql.GraftShim.expression(col("doc")),
+          org.apache.spark.sql.GraftShim.expression(col("tf")),
+          absCap.toInt).toAggregateExpression()).as("ps"))
+      .crossJoin(broadcast(totals))
+      .filter(size(col("ps")).cast("long") <= effCap)
+      .select(col("ps"),
+        round(log(col("n_docs").cast("double") / size(col("ps"))) * 1e6)
+          .cast("long").as("idf6"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val norms = posted
+      .select(explode(col("ps")).as("e"), col("idf6"))
+      .select(col("e.k").as("doc"), (col("e.v") * col("idf6")).as("w"))
+      .groupBy("doc").agg(sum(col("w").cast(dec) * col("w")).as("n2"))
+    val dots = posted
+      .select(col("ps"), col("idf6"), explode(col("ps")).as("a"))
+      .select(col("a"), col("idf6"), explode(col("ps")).as("b"))
+      .filter(col("a.k") < col("b.k"))
+      .groupBy(col("a.k").as("doc_a"), col("b.k").as("doc_b"))
+      .agg(sum((col("a.v") * col("idf6")).cast(dec) *
+        (col("b.v") * col("idf6"))).as("dot"))
     val scored = dots
       .join(norms.select(col("doc").as("doc_a"), col("n2").as("n2_a")), "doc_a")
       .join(norms.select(col("doc").as("doc_b"), col("n2").as("n2_b")), "doc_b")
@@ -918,7 +877,7 @@ object Dedup {
         sqrt(col("n2_a").cast("double") * col("n2_b").cast("double")))
       .filter(col("cosine") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("cosine"))
-    materializeAndRelease(scored, pinned)
+    materializeAndRelease(scored, posted)
   }
 
   /** C4-style corpus-level LINE dedup: a line (or sentence) that appears in
@@ -1104,7 +1063,7 @@ object Dedup {
     val banded = fp.select(col("doc"), col("simhash"), posexplode(array(quarters: _*)))
       .withColumnRenamed("pos", "q").withColumnRenamed("col", "qval")
     // r18 (VERDICT r17 #3): the quarter-band SELF-JOIN — the last
-    // join-shaped candidate generator — becomes the postings form the
+    // join-shaped candidate generator — became the postings form the
     // other three generators use: one groupBy (q, qval) gathers each
     // bucket's (doc, simhash) entries ([[graft.functions.CollectPairsUpToF]])
     // and candidate pairs stream out of a double explode, so the banded
@@ -1112,33 +1071,22 @@ object Dedup {
     // the join itself. Unlike the LSH/df-capped generators there is no
     // semantic bucket cap here, so the collect cap is set to the aggregate's
     // maximum (~2³⁰ entries) — unreachable by any input that could finish
-    // the Σ bucket² pair expansion anyway — keeping results EXACTLY equal
-    // to the join shape (DedupSpec pins the two paths; non-long ids keep
-    // the join). The hamming gate now runs BEFORE the pair dropDuplicates
-    // in both paths: hamming is a pure function of the pair, so the dedup
-    // exchange carries only hamming-surviving pairs (order-of-operations
-    // per cosineDupPairs' filter-then-dedupe lesson).
-    val cand =
-      if (fp.schema("doc").dataType == org.apache.spark.sql.types.LongType) {
-        val buckets = banded.groupBy(col("q"), col("qval"))
-          .agg(org.apache.spark.sql.GraftShim.column(
-            graft.functions.CollectPairsUpToF(
-              org.apache.spark.sql.GraftShim.expression(col("doc")),
-              org.apache.spark.sql.GraftShim.expression(col("simhash")),
-              (Int.MaxValue / 2) - 2).toAggregateExpression()).as("ps"))
-          .select("ps")
-        buckets.select(col("ps"), explode(col("ps")).as("a"))
-          .select(col("a"), explode(col("ps")).as("b"))
-          .filter(col("a.k") < col("b.k"))
-          .select(col("a.k").as("doc_a"), col("b.k").as("doc_b"),
-            col("a.v").as("h_a"), col("b.v").as("h_b"))
-      } else {
-        banded.as("a").join(banded.as("b"),
-            col("a.q") === col("b.q") && col("a.qval") === col("b.qval") &&
-              col("a.doc") < col("b.doc"))
-          .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-            col("a.simhash").as("h_a"), col("b.simhash").as("h_b"))
-      }
+    // the Σ bucket² pair expansion anyway, so results equal the join
+    // shape's. The hamming gate runs BEFORE the pair dropDuplicates:
+    // hamming is a pure function of the pair, so the dedup exchange
+    // carries only hamming-surviving pairs (order-of-operations per
+    // cosineDupPairs' filter-then-dedupe lesson).
+    val cand = banded.groupBy(col("q"), col("qval"))
+      .agg(org.apache.spark.sql.GraftShim.column(
+        graft.functions.CollectPairsUpToF(
+          org.apache.spark.sql.GraftShim.expression(col("doc")),
+          org.apache.spark.sql.GraftShim.expression(col("simhash")),
+          (Int.MaxValue / 2) - 2).toAggregateExpression()).as("ps"))
+      .select(col("ps"), explode(col("ps")).as("a"))
+      .select(col("a"), explode(col("ps")).as("b"))
+      .filter(col("a.k") < col("b.k"))
+      .select(col("a.k").as("doc_a"), col("b.k").as("doc_b"),
+        col("a.v").as("h_a"), col("b.v").as("h_b"))
     val blocked = cand.withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("doc_a", "doc_b")

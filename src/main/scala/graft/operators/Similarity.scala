@@ -21,16 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** (group, id, score, rank) rows of the k best long ids per group — the
-    * r18 aggregate replacement for `row_number().over(partitionBy(group)
+  /** (group, id, score, rank) rows of the k best ids per group — the r18
+    * aggregate replacement for `row_number().over(partitionBy(group)
     * .orderBy(score desc, id)) <= k` on corpus-sized inputs: the window
     * form locally SORTS every candidate row (even under WindowGroupLimit's
     * partial top-k — 34 of q_ann_pq's ADC-stage executor-seconds at sf1
     * were this sort), where the aggregate keeps an O(k) heap per group
-    * with map-side partials ([[graft.functions.TopKByF]] scaladoc; strict
-    * (score, id) total order makes the two forms value-identical —
-    * R18OptSpec pins it). Callers dispatch on the id type and keep the
-    * window for non-long ids.
+    * with map-side partials. One plan for every id type; the top-k
+    * semantics are [[graft.functions.TopKByF]]'s.
     */
   private def topKAgg(df: DataFrame, groupCol: String, scoreCol: String,
       idCol: String, k: Int): DataFrame =
@@ -44,9 +42,6 @@ object Similarity {
       .select(col(groupCol), col("__e.id").as(idCol),
         col("__e.score").as(scoreCol), (col("__pos") + 1).cast("int").as("rank"))
 
-  private def isLong(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType == org.apache.spark.sql.types.LongType
-
   /** Force a hoisted per-row column (norms, PQ codes) to actually evaluate
     * once per row on the STREAM side of a broadcast join — codegen
     * otherwise defers it into the per-build-row loop and re-evaluates it
@@ -58,8 +53,11 @@ object Similarity {
       org.apache.spark.sql.GraftShim.expression(c)))
 
   /** Exact top-k by cosine similarity for each query vector.
-    * Output: (query_id, vec_id, sim, rank), rank 1..k per query,
-    * deterministic tie-break on vec_id.
+    * Output: (query_id, vec_id, sim, rank), rank 1..k per query.
+    * Top-k semantics, the same for every id type: rows with a null id are
+    * skipped, a null score ranks after every non-null score, -0.0 ties
+    * with 0.0, and ties break on the id ascending under the id type's SQL
+    * ordering ([[graft.functions.TopKByF]]).
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -72,15 +70,7 @@ object Similarity {
         queries.withColumn("__qn", VectorOps.normF(col(queryVecCol)))))
       .withColumn("sim", VectorOps.cosinePre(col(vecCol), col(queryVecCol),
         col("__cn"), col("__qn")))
-    if (isLong(corpus, idCol))
-      topKAgg(scored, queryIdCol, "sim", idCol, k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    else {
-      val w = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    }
+    topKAgg(scored, queryIdCol, "sim", idCol, k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
@@ -118,6 +108,11 @@ object Similarity {
     * once, never re-scanned or re-shuffled — which is what makes this
     * the preferred recall dial at 100 TB (an extra TABLE would re-hash
     * and re-explode the corpus instead).
+    *
+    * Top-k semantics, the same for every id type: rows with a null id are
+    * skipped, a null score ranks after every non-null score, -0.0 ties
+    * with 0.0, and ties break on the id ascending under the id type's SQL
+    * ordering ([[graft.functions.TopKByF]]).
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, nPlanes: Int = 8,
       nTables: Int = 1, multiProbe: Boolean = false,
@@ -152,15 +147,7 @@ object Similarity {
         VectorOps.cosinePre(col(vecCol), col(queryVecCol),
           col("__cn"), col("__qn")).as("sim"))
       .dropDuplicates(queryIdCol, idCol)
-    if (isLong(corpus, idCol))
-      topKAgg(scored, queryIdCol, "sim", idCol, k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    else {
-      val w = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    }
+    topKAgg(scored, queryIdCol, "sim", idCol, k)
   }
 
   /** Row-local PQ encode: vector → M nearest-codeword indices
@@ -297,6 +284,12 @@ object Similarity {
     *
     * Output schema matches [[bruteForceTopK]]: (query_id, vec_id, sim,
     * rank) with exact cosine sims after re-rank.
+    *
+    * Top-k semantics (the ADC candidate cut and the final cut), the same
+    * for every id type: rows with a null id are skipped, a null score
+    * ranks after every non-null score, -0.0 ties with 0.0, and ties break
+    * on the id ascending under the id type's SQL ordering
+    * ([[graft.functions.TopKByF]]).
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nSubspaces: Int = 0, nCodes: Int = 16, rerank: Int = 64,
@@ -306,7 +299,6 @@ object Similarity {
     val encoded = corpus.select(col(idCol),
       evalOnce(pqEncode(col(vecCol), cb)).as("pq_codes"))
     val r = math.max(k, rerank)
-    val aw = Window.partitionBy(col(queryIdCol)).orderBy(col("sim_adc").desc, col(idCol))
     // the ADC rank shuffle carries (query_id, id, sim_adc) ONLY — the
     // query vector is re-attached to the ≤ queries×rerank survivors by a
     // broadcast join instead of riding every corpus×queries row through
@@ -316,31 +308,17 @@ object Similarity {
     // (PqLutF scaladoc) — the scan was paying exact-cosine flops before.
     // r18: the corpus×queries ADC rank runs as a bounded-heap AGGREGATE
     // (topKAgg scaladoc) — the window form locally sorted every candidate
-    // row; the rerank top-k follows the same form (long ids; non-long
-    // keeps the window shape)
+    // row; the rerank top-k follows the same form
     val adc = encoded.crossJoin(broadcast(queries.select(col(queryIdCol),
         pqLut(col(queryVecCol), cb).as("__lut"))))
       .withColumn("sim_adc", pqCosineLut(col("pq_codes"), col("__lut"), cb))
       .select(col(queryIdCol), col(idCol), col("sim_adc"))
-    val cand =
-      if (isLong(corpus, idCol))
-        topKAgg(adc, queryIdCol, "sim_adc", idCol, r)
-          .select(col(queryIdCol), col(idCol))
-      else adc.withColumn("arank", row_number().over(aw))
-        .filter(col("arank") <= r)
-        .select(col(queryIdCol), col(idCol))
+    val cand = topKAgg(adc, queryIdCol, "sim_adc", idCol, r)
+      .select(col(queryIdCol), col(idCol))
     val reranked = corpus.join(broadcast(cand), idCol)
       .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))), queryIdCol)
       .withColumn("sim", VectorOps.cosineF(col(vecCol), col(queryVecCol)))
-    if (isLong(corpus, idCol))
-      topKAgg(reranked, queryIdCol, "sim", idCol, k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    else {
-      val w = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-      reranked.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    }
+    topKAgg(reranked, queryIdCol, "sim", idCol, k)
   }
 
   /** IVF + PQ composed — the billion-vector architecture proper (FAISS
@@ -362,6 +340,12 @@ object Similarity {
     *
     * Output schema matches [[bruteForceTopK]]: (query_id, vec_id, sim,
     * rank) with exact cosine sims after re-rank.
+    *
+    * Top-k semantics (the ADC candidate cut and the final cut), the same
+    * for every id type: rows with a null id are skipped, a null score
+    * ranks after every non-null score, -0.0 ties with 0.0, and ties break
+    * on the id ascending under the id type's SQL ordering
+    * ([[graft.functions.TopKByF]]).
     */
   /* Sizing at corpus scale (FAISS guidance, applies to every IVF-family
    * op here): nCentroids ≈ √N to N/1000 keeps the per-query scan
@@ -398,33 +382,19 @@ object Similarity {
       .filter(col("crn") <= nProbe)
       .select(col(queryIdCol), pqLut(col(queryVecCol), cb).as("__lut"), col("cell"))
     val r = math.max(k, rerank)
-    val aw = Window.partitionBy(col(queryIdCol)).orderBy(col("sim_adc").desc, col(idCol))
     // slim ADC rank shuffle (see pqTopK): query vectors re-attach to the
     // survivors via broadcast, never riding the per-candidate exchange.
     // r18: ADC rank + rerank run as bounded-heap aggregates (topKAgg
-    // scaladoc) on long ids; non-long keeps the window shape.
+    // scaladoc).
     val adc = index.join(broadcast(probes), "cell")
       .withColumn("sim_adc", pqCosineLut(col("pq_codes"), col("__lut"), cb))
       .select(col(queryIdCol), col(idCol), col("sim_adc"))
-    val cand =
-      if (isLong(corpus, idCol))
-        topKAgg(adc, queryIdCol, "sim_adc", idCol, r)
-          .select(col(queryIdCol), col(idCol))
-      else adc.withColumn("arank", row_number().over(aw))
-        .filter(col("arank") <= r)
-        .select(col(queryIdCol), col(idCol))
+    val cand = topKAgg(adc, queryIdCol, "sim_adc", idCol, r)
+      .select(col(queryIdCol), col(idCol))
     val reranked = corpus.join(broadcast(cand), idCol)
       .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))), queryIdCol)
       .withColumn("sim", VectorOps.cosineF(col(vecCol), col(queryVecCol)))
-    if (isLong(corpus, idCol))
-      topKAgg(reranked, queryIdCol, "sim", idCol, k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    else {
-      val w = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-      reranked.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    }
+    topKAgg(reranked, queryIdCol, "sim", idCol, k)
   }
 
   /** Row-local cell assignment: cosine-argmax over the driver-side centroid
@@ -449,6 +419,11 @@ object Similarity {
     * window sort here; fixed per the round-2 review). The search join then
     * touches ~nProbe/nCentroids of the data per query. The only driver
     * materializations are the ≤ nCentroids-row centroid samples/means.
+    *
+    * Top-k semantics, the same for every id type: rows with a null id are
+    * skipped, a null score ranks after every non-null score, -0.0 ties
+    * with 0.0, and ties break on the id ascending under the id type's SQL
+    * ordering ([[graft.functions.TopKByF]]).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4, kmeansSweeps: Int = 0,
@@ -495,16 +470,8 @@ object Similarity {
       .withColumn("sim", VectorOps.cosinePre(col(vecCol), col(queryVecCol),
         col("__cn"), col("__qn")))
     // r18: bounded-heap top-k aggregate instead of the window sort
-    // (topKAgg scaladoc); non-long ids keep the window shape
-    if (isLong(corpus, idCol))
-      topKAgg(scored, queryIdCol, "sim", idCol, k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    else {
-      val w = Window.partitionBy(col(queryIdCol)).orderBy(col("sim").desc, col(idCol))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("sim"), col("rank"))
-    }
+    // (topKAgg scaladoc)
+    topKAgg(scored, queryIdCol, "sim", idCol, k)
   }
 
   /** Centroid seeding shared by [[ivfTopK]] and [[semanticDedup]]: a

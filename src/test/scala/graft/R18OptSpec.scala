@@ -2,61 +2,60 @@ package graft
 
 import graft.functions.VectorOps
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Round-18 optimization pins — every rewrite this round must be
-  * value-identical to the shape it replaced:
-  *   - simhashPairs postings path ≡ the quarter-band self-join,
+  * value-identical to the shape it replaced (the other postings and top-k
+  * aggregates are pinned against their join/window shapes in IdTypeSpec):
+  *   - simhashPairs' postings path ≡ the quarter-band self-join, on bigint
+  *     and on string ids,
   *   - seedPools ≡ one seedCentroids call per size (centroid identity),
   *   - cosinePre (hoisted norms) ≡ cosineF, including null/zero vectors,
   *   - ADC via per-query LUT ≡ per-row reconstruction, to well under the
   *     rank separation of real data, with identical top-k candidate sets
   *     on the bench corpus,
   *   - keeperAssignment's chunked driver probe ≡ the distributed fixpoint
-  *     across the small-probe boundary.
+  *     across the small-probe boundary,
+  *   - EvalOnceF stays in the stream-side scan Project of the PQ scans, and
+  *   - the Tables schema cache keeps one entry per path across rewrites.
   */
-class R18OptSpec extends SparkSpec {
+class R18OptSpec extends IdTypeChecks {
   import spark.implicits._
 
+  /** The quarter-band join the postings path replaced, written out as the
+    * reference: self-join on (quarter, 16-bit value), hamming ≤ max. */
+  private def quarterJoin(maxHamming: Int)(f: Column => Column): DataFrame = {
+    val fp = Dedup.simhash(docsAs(f), "doc_id", "text")
+    val banded = fp.select(col("doc"), col("simhash"), posexplode(array((0 until 4).map(q =>
+      shiftrightunsigned(col("simhash"), q * 16).bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("q", "qval")))
+    joinPairs(banded, Seq("q", "qval"), "simhash")
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming).distinct()
+  }
+
   test("simhashPairs: postings path equals the quarter-band join fallback") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    // (min, max) pair identity: string ids order LEXICOGRAPHICALLY in the
-    // fallback join's a < b, so the same pair can emit with swapped columns
-    def norm(rows: Array[org.apache.spark.sql.Row], toLong: Any => Long) =
-      rows.map { r =>
-        val (a, b) = (toLong(r.get(0)), toLong(r.get(1)))
-        (math.min(a, b), math.max(a, b), r.getInt(2))
-      }.toSet
-    val viaLong = norm(
-      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8).collect(),
-      _.asInstanceOf[Long])
-    // string ids exercise the legacy join-based path (postings need bigint)
-    val viaString = norm(
-      Dedup.simhashPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
-        "doc_id", "text", maxHamming = 8).collect(),
-      _.asInstanceOf[String].toLong)
-    assert(viaLong.nonEmpty && viaLong === viaString)
+    check("simhash", Seq(bigint, suppId),
+      f => Dedup.simhashPairs(docsAs(f), "doc_id", "text", maxHamming = 8), quarterJoin(8))
   }
 
   test("simhashPairs verify path: postings equals join fallback end-to-end") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    def norm(rows: Array[org.apache.spark.sql.Row], toLong: Any => Long) =
-      rows.map { r =>
-        val (a, b) = (toLong(r.get(0)), toLong(r.get(1)))
-        (math.min(a, b), math.max(a, b), r.getInt(2),
-          math.round(r.getDouble(3) * 1e9))
-      }.toSet
-    val viaLong = norm(
-      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 16,
-        verify = true, shingleSize = 3, minJaccard = 0.1).collect(),
-      _.asInstanceOf[Long])
-    val viaString = norm(
-      Dedup.simhashPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
-        "doc_id", "text", maxHamming = 16,
-        verify = true, shingleSize = 3, minJaccard = 0.1).collect(),
-      _.asInstanceOf[String].toLong)
-    assert(viaLong.nonEmpty && viaLong === viaString)
+    // the verify stage's exact shingle Jaccard, over the joined candidates
+    def verified(f: Column => Column) = {
+      val sets = Dedup.shingles(docsAs(f), "doc_id", "text", 3)
+        .groupBy("doc").agg(collect_set(col("shingle")).as("sh"))
+      quarterJoin(16)(f)
+        .join(sets.select(col("doc").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+        .join(sets.select(col("doc").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .select(col("doc_a"), col("doc_b"), col("hamming"), (col("inter").cast("double") /
+          (size(col("sh_a")) + size(col("sh_b")) - col("inter"))).as("jaccard"))
+        .filter(col("jaccard") >= 0.1)
+    }
+    check("simhash verify", Seq(bigint, suppId),
+      f => Dedup.simhashPairs(docsAs(f), "doc_id", "text", maxHamming = 16,
+        verify = true, shingleSize = 3, minJaccard = 0.1), verified)
   }
 
   test("seedPools equals one seedCentroids call per size (centroid identity)") {
@@ -117,41 +116,6 @@ class R18OptSpec extends SparkSpec {
     assert(topK("direct") === topK("lut"))
   }
 
-  test("TopKByF aggregate equals the row_number window (ties, -0.0, nulls)") {
-    val rows = Seq[(Int, java.lang.Long, java.lang.Double)](
-      (1, 10L, 0.9), (1, 11L, 0.9), (1, 12L, 0.9),      // three-way tie → id asc
-      (1, 13L, 0.95), (1, 14L, -0.5), (1, 15L, null),   // null score ranks last
-      (2, 20L, 0.0), (2, 21L, -0.0), (2, 22L, -0.0),    // -0.0 == 0.0 ties → id
-      (2, 23L, 1e-300), (3, 30L, 0.7)
-    )
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(r =>
-        org.apache.spark.sql.Row(r._1, r._2, r._3)), 3),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s",
-          org.apache.spark.sql.types.DoubleType))))
-    for (k <- Seq(1, 2, 3, 6)) {
-      val viaAgg = df.groupBy(col("g"))
-        .agg(GraftShim.column(graft.functions.TopKByF(
-          GraftShim.expression(col("s")), GraftShim.expression(col("id")), k)
-          .toAggregateExpression()).as("tk"))
-        .select(col("g"), posexplode(col("tk")).as(Seq("p", "e")))
-        .select(col("g"), col("e.id").as("id"), (col("p") + 1).as("rank"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("g")).orderBy(col("s").desc, col("id"))
-      val viaWindow = df.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("g"), col("id"), col("rank"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
-      assert(viaAgg === viaWindow, s"k=$k")
-    }
-  }
-
   test("EvalOnceF is a value no-op (wrapped vs bare, incl. nulls)") {
     val df = Seq(
       (1L, Some(Seq(1.0f, 2.0f))), (2L, Some(Seq(0.0f, 0.0f))),
@@ -197,5 +161,62 @@ class R18OptSpec extends SparkSpec {
     val viaDist = Dedup.keeperAssignment(docs8, "doc_id", pairs8, maxDriverEdges = 3L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver === viaDist)
+  }
+
+  /** Stream side of every broadcast join in the final (post-AQE) plan. */
+  private def streamSides(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    df.collect() // finalizes the adaptive plan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    helper.collect(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => if (j.buildSide == BuildRight) j.left else j.right
+      case j: BroadcastNestedLoopJoinExec => j.buildSide match {
+        case BuildRight => j.left
+        case BuildLeft => j.right
+      }
+    }
+  }
+
+  test("eval_once stays in the stream-side scan Project of pqTopK and ivfPqTopK") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val corpus = Tables.load(spark, sfDir, "embeddings")
+    val queries = corpus.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    // the PQ encode must run once per corpus row: in a Project that reads
+    // the scan directly (no join below it) on a join's STREAM side
+    def scanProjectsEvalOnce(side: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      side.find {
+        case p: ProjectExec =>
+          p.projectList.exists(_.find(_.isInstanceOf[graft.functions.EvalOnceF]).isDefined) &&
+            p.find(_.isInstanceOf[FileSourceScanExec]).isDefined &&
+            p.find(_.isInstanceOf[BaseJoinExec]).isEmpty
+        case _ => false
+      }.isDefined
+    for ((name, df) <- Seq(
+        "pqTopK" -> Similarity.pqTopK(corpus, queries, 5),
+        "ivfPqTopK" -> Similarity.ivfPqTopK(corpus, queries, 5))) {
+      val sides = streamSides(df)
+      assert(sides.nonEmpty, s"$name: no broadcast join in the plan")
+      assert(sides.exists(scanProjectsEvalOnce),
+        s"$name: eval_once left the stream-side scan Project:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("Tables schema cache: a rewritten table replaces its entry, one per path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val path = s"$dir/t.parquet"
+    def entries = scala.jdk.CollectionConverters.SetHasAsScala(Tables.schemaCache.keySet())
+      .asScala.count(_ == path)
+    Seq((1L, "a")).toDF("id", "s").write.parquet(path)
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s") && entries == 1)
+    Thread.sleep(1100) // a distinct directory mtime, at any FS timestamp granularity
+    Seq((1L, 2.0, "b")).toDF("id", "x", "s").write.mode("overwrite").parquet(path)
+    val reread = Tables.load(spark, dir, "t")
+    assert(reread.columns.toSeq == Seq("id", "x", "s"), "stale schema served")
+    assert(reread.collect().map(_.getDouble(1)).toSeq == Seq(2.0))
+    assert(entries == 1, "a rewrite must replace the entry, not add one")
   }
 }

@@ -112,41 +112,6 @@ class ShingleFSpec extends SparkSpec {
     assert(!got.exists(_._1 == 4L) && !got.exists(_._1 == 6L))
   }
 
-  test("ngramJaccardPairs: single-pass postings path equals the join fallback") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    def norm(rows: Array[org.apache.spark.sql.Row], toLong: Any => Long) =
-      rows.map { r =>
-        val (a, b) = (toLong(r.get(0)), toLong(r.get(1)))
-        (math.min(a, b), math.max(a, b), math.round(r.getDouble(2) * 1e9))
-      }.toSet
-    val viaLong = norm(
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.2, 100).collect(),
-      _.asInstanceOf[Long])
-    // string ids exercise the legacy join-based path (postings need bigint)
-    val viaString = norm(
-      Dedup.ngramJaccardPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
-        "doc_id", "text", 2, 0.2, 100).collect(),
-      _.asInstanceOf[String].toLong)
-    assert(viaLong.nonEmpty && viaLong === viaString)
-  }
-
-  test("tfidfCosinePairs: postings path equals the join fallback") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    def norm(rows: Array[org.apache.spark.sql.Row], toLong: Any => Long) =
-      rows.map { r =>
-        val (a, b) = (toLong(r.get(0)), toLong(r.get(1)))
-        (math.min(a, b), math.max(a, b), math.round(r.getDouble(2) * 1e9))
-      }.toSet
-    val viaLong = norm(
-      Dedup.tfidfCosinePairs(docs, "doc_id", "text", 0.3, 0.2).collect(),
-      _.asInstanceOf[Long])
-    val viaString = norm(
-      Dedup.tfidfCosinePairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
-        "doc_id", "text", 0.3, 0.2).collect(),
-      _.asInstanceOf[String].toLong)
-    assert(viaLong.nonEmpty && viaLong === viaString)
-  }
-
   test("CollectUpToF: complete lists below the cap, hard-bounded above it") {
     val df = Seq.tabulate(500)(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
     val agg = df.groupBy("k").agg(GraftShim.column(

@@ -466,6 +466,47 @@ class SqlPipelineSpec extends SparkSpec {
     assert(kept.nonEmpty && kept == expKept)
   }
 
+  test("PIPELINE dedup_minhash/ann_topk/semdedup: string ids keep the bigint survivors") {
+    // ids shifted to a fixed width (1000..), so a string id orders like its
+    // bigint under SQL and shares its text (IVF/semdedup seeding hashes the
+    // id's string form); embeddings gain near-copies so semdedup drops rows
+    def script(id: String => String, body: String) = new Pipeline(spark, streaming = false).run(
+      s"""CREATE TABLE docs0 WITH (connector = 'single_file',
+         |  path = '$sfDir/documents.parquet', format = 'parquet', type = 'source');
+         |CREATE TABLE emb0 WITH (connector = 'single_file',
+         |  path = '$sfDir/embeddings.parquet', format = 'parquet', type = 'source');
+         |CREATE VIEW docs AS SELECT ${id("doc_id + 1000")} AS doc_id, text FROM docs0;
+         |CREATE VIEW emb AS SELECT ${id("vec_id + 1000")} AS vec_id, embedding FROM emb0
+         |  UNION ALL SELECT ${id("vec_id + 1500")} AS vec_id,
+         |    transform(embedding, x -> x * CAST(1.01 AS FLOAT)) AS embedding
+         |  FROM emb0 WHERE vec_id % 10 = 0;
+         |CREATE VIEW qs AS SELECT ${id("vec_id + 1000")} AS query_id, embedding AS query_vec
+         |  FROM emb0 WHERE vec_id % 50 = 0;
+         |$body""".stripMargin).get.collect().map(_.toSeq.map {
+        case s: String => s.toLong
+        case v => v
+      }).toSet
+    val faces = Seq(
+      """CREATE TABLE kept AS PIPELINE dedup_minhash(docs, id => 'doc_id', text => 'text',
+        |  threshold => '0.5');
+        |SELECT doc_id FROM kept""".stripMargin,
+      """CREATE TABLE hits AS PIPELINE ann_topk(emb, queries => 'qs', k => '5',
+        |  method => 'bruteforce');
+        |SELECT query_id, vec_id, rank FROM hits""".stripMargin,
+      """CREATE TABLE hits AS PIPELINE ann_topk(emb, queries => 'qs', k => '5',
+        |  method => 'ivfpq');
+        |SELECT query_id, vec_id, rank FROM hits""".stripMargin,
+      """CREATE TABLE uniqv AS PIPELINE semdedup(emb, tau => '0.95');
+        |SELECT vec_id FROM uniqv""".stripMargin)
+    val sizes = faces.map { body =>
+      val viaBigint = script(e => e, body)
+      val viaString = script(e => s"CAST($e AS STRING)", body)
+      assert(viaBigint.nonEmpty && viaString == viaBigint, body)
+      viaBigint.size
+    }
+    assert(sizes(0) < 500 && sizes(3) < 550, s"nothing deduplicated: $sizes")
+  }
+
   test("PIPELINE curation faces second tranche: c4_clean, pii_scrub, dedup_urls, chunk_tokens, pack_sequences (r9)") {
     import graft.operators.{Chunking, TextAnalysis, Urls}
     val docs = Tables.load(spark, sfDir, "documents")
