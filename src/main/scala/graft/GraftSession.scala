@@ -24,9 +24,9 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // r17 note: coalescePartitions.parallelismFirst stays at its TRUE
-      // default, measured deliberately (R17Probe): size-based coalescing
-      // (false + 64 MB advisory) collapsed the dedup pipelines' shuffles
-      // to 1 task and serialized their CPU-heavy, small-byte stages —
+      // default, measured deliberately (OPTIMIZATION_r17.md): size-based
+      // coalescing (false + 64 MB advisory) collapsed the dedup pipelines'
+      // shuffles to 1 task and serialized their CPU-heavy, small-byte stages —
       // q_tfidf 1.9 s → 9.3 s, q_ngram_jaccard 1.7 s → 5.2 s. This
       // engine's post-shuffle stages are compute-bound per byte (hash
       // self-joins, signature math), the exact case the parallelism

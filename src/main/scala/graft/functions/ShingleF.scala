@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Row-local shingle/term-frequency math, callable from generated code
   * (top-level object ⇒ static forwarders).
   *
-  * Round-17 measurement (R17Probe/R17Micro at sf0.1): the previous
+  * Round-17 measurement (OPTIMIZATION_r17.md, at sf0.1): the previous
   * higher-order-function formulation of shingle construction —
   * `array_distinct(transform(sequence(...), i => concat_ws(" ",
   * slice(toks, i+1, n))))` — cost ~32 µs per shingle because Spark never

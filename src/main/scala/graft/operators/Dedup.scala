@@ -27,23 +27,14 @@ object Dedup {
     * before returning. Pinned cost after return: the output rows only,
     * reclaimed by the ContextCleaner once the frame is unreferenced.
     * (`keeperAssignment` manages its own loop-carried caches the same way.)
+    * The checkpoint is a Dataset action, so a `QueryExecutionListener`
+    * (`graft.Probe plans`) sees the pre-checkpoint pipeline's plan.
     */
   private[operators] def materializeAndRelease(result: DataFrame, pinned: DataFrame*): DataFrame = {
-    val tap = planTap
-    // advisory only (ADVICE r17): a dev-tap failure must never propagate
-    // into a production dedup pipeline
-    if (tap != null) try tap(result) catch { case scala.util.control.NonFatal(_) => () }
     val out = result.localCheckpoint(true)
     pinned.foreach(_.unpersist())
     out
   }
-
-  /** Dev-only plan tap (examples.R17Plans): when set, receives the
-    * pre-checkpoint pipeline frame so `explain` tooling can see through
-    * [[materializeAndRelease]]'s lineage truncation. Never set in
-    * production paths; null checks cost nothing.
-    */
-  @volatile private[graft] var planTap: DataFrame => Unit = null
 
   /** Exact dedup by content hash: one shuffle on md5(text).
     * Returns one row per distinct content: the surviving (minimum) id, the
@@ -104,12 +95,12 @@ object Dedup {
     * [[graft.functions.ShingleHashesF]] — the old higher-order-function
     * chain (`array_distinct(transform(sequence, i => concat_ws(slice)))`)
     * ran interpreted (Spark never codegens lambdas) at ~32 µs/shingle and
-    * dominated every dedup query's executor time (R17Probe: 13-19 CPU-s
-    * per corpus traversal at sf0.1, ×2 traversals here). Value-identical:
-    * same windows, " " join, first-occurrence distinct on the hash,
-    * xxhash64 seed 42. The explode still takes the expression inline in
-    * one projection (the round-4 lesson: a separate Project below the
-    * Generate broke scan fusion, 13× slower).
+    * dominated every dedup query's executor time (OPTIMIZATION_r17.md:
+    * 13-19 CPU-s per corpus traversal at sf0.1, ×2 traversals here).
+    * Value-identical: same windows, " " join, first-occurrence distinct on
+    * the hash, xxhash64 seed 42. The explode still takes the expression
+    * inline in one projection (the round-4 lesson: a separate Project
+    * below the Generate broke scan fusion, 13× slower).
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     spreadForCompute(df).select(

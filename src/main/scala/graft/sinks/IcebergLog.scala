@@ -1514,7 +1514,17 @@ object IcebergLog {
         StructType(statSchema.fields ++ extraStatFields), ids)
     }
     walkDir(scratch).reverse.foreach(Files.deleteIfExists(_))
-    added
+    // Spark's writer keeps task 0's file even when the task got no rows
+    // (so an empty job still leaves a schema behind). Such a 0-row part
+    // carries no column metrics, which initial-default reads need to
+    // prove a column present: drop it, unless every part is empty (an
+    // all-empty batch commits as before).
+    val (empty, nonEmpty) = added.partition(_.records == 0)
+    if (nonEmpty.isEmpty) added
+    else {
+      empty.foreach(a => Files.deleteIfExists(Paths.get(a.path)))
+      nonEmpty
+    }
   }
 
   /** One footer read per fresh data file: record count (the only part a

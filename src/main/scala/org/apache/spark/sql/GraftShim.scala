@@ -30,6 +30,12 @@ object GraftShim {
   def sqlCacheIsEmpty(spark: SparkSession): Boolean =
     spark.sharedState.cacheManager.isEmpty
 
+  /** Blocks until every listener event posted so far has been delivered:
+    * the bus is asynchronous, so a `QueryExecutionListener` may not yet
+    * have seen an action that already returned.
+    */
+  def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Compile `df`'s physical plan NOW and return it re-wrapped as an
     * RDD-backed frame (r17). Two properties the stamped-schema read
     * paths need: (a) session confs influencing the plan are captured at

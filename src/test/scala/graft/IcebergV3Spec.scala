@@ -136,6 +136,34 @@ class IcebergV3Spec extends SparkSpec {
     Files.write(p, node.toString.getBytes("UTF-8"))
   }
 
+  /** Reshape `table`'s latest metadata to the iceberg-java 1.8 form:
+    * format-version 3 plus initial-default/write-default 7 on the
+    * current schema's `bonus` field.
+    */
+  private def withBonusDefault7(table: String): Unit = {
+    val dir = Paths.get(table, "metadata")
+    val vf = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .filter(s => s.startsWith("v") && s.endsWith(".metadata.json"))
+      .map(s => s.stripPrefix("v").stripSuffix(".metadata.json").toInt).max
+    val p = dir.resolve(s"v$vf.metadata.json")
+    val node = mapper.readTree(Files.readAllBytes(p))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.put("format-version", 3)
+    val curId = node.get("current-schema-id").asInt()
+    val schemas = node.get("schemas")
+    (0 until schemas.size()).map(schemas.get)
+      .find(_.get("schema-id").asInt() == curId).get.get("fields")
+      .forEach { f =>
+        if (f.get("name").asText() == "bonus") {
+          val o = f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          o.put("initial-default", 7)
+          o.put("write-default", 7)
+          ()
+        }
+      }
+    Files.write(p, node.toString.getBytes("UTF-8"))
+  }
+
   /** 4 rows in ONE data file, merge-on-read deletes armed. */
   private def morTable(): String = {
     import spark.implicits._
@@ -367,27 +395,7 @@ class IcebergV3Spec extends SparkSpec {
         .toDF("id", "v", "bonus").coalesce(1), table)
     // → the iceberg-java 1.8 shape: v3 + initial-default/write-default
     // on the added field of the CURRENT schema entry
-    val dir = Paths.get(table, "metadata")
-    val vf = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-      .filter(s => s.startsWith("v") && s.endsWith(".metadata.json"))
-      .map(s => s.stripPrefix("v").stripSuffix(".metadata.json").toInt).max
-    val p = dir.resolve(s"v$vf.metadata.json")
-    val node = mapper.readTree(Files.readAllBytes(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.put("format-version", 3)
-    val curId = node.get("current-schema-id").asInt()
-    val schemas = node.get("schemas")
-    (0 until schemas.size()).map(schemas.get)
-      .find(_.get("schema-id").asInt() == curId).get.get("fields")
-      .forEach { f =>
-        if (f.get("name").asText() == "bonus") {
-          val o = f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          o.put("initial-default", 7)
-          o.put("write-default", 7)
-          ()
-        }
-      }
-    Files.write(p, node.toString.getBytes("UTF-8"))
+    withBonusDefault7(table)
     // pre-field rows fill 7; post-field rows keep 300 and NULL
     val got = IcebergLog.read(spark, table).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(2)) -1L else r.getLong(2)))
@@ -492,6 +500,32 @@ class IcebergV3Spec extends SparkSpec {
     assert(m20.isNullAt(3), m20)      // more: no default → null
   }
 
+  test("writeBatch commits no 0-record data file from empty partitions; initial-default reads stay provable") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
+    val table = tmpTable()
+    // 4 scan partitions with every row of partition 0 filtered out:
+    // Spark still writes task 0's file, with no rows and no metrics
+    def batch(from: Long) = spark.range(from, from + 40, 1, 4)
+      .filter(col("id") >= from + 20).select(col("id"), (col("id") * 10).as("v"))
+    IcebergLog.writeBatch(batch(0), table)
+    assert(IcebergLog.addColumns(spark, table, Seq("bonus" -> LongType)).isDefined)
+    IcebergLog.writeBatch(batch(100).withColumn("bonus", col("id") * 2), table)
+    val entries = IcebergLog.entries(table)
+    assert(entries.nonEmpty && entries.forall(_._3 > 0), entries)
+    withBonusDefault7(table)
+    val got = IcebergLog.read(spark, table).collect()
+      .map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1).toSeq
+    assert(got == (20L until 40L).map(_ -> 7L) ++ (120L until 140L).map(i => i -> i * 2),
+      got)
+    // an all-empty batch still commits its one schema-carrying file
+    val before = IcebergLog.entries(table).size
+    assert(IcebergLog.writeBatch(batch(200).filter(col("id") < 0)
+      .withColumn("bonus", col("id")), table).isDefined)
+    assert(IcebergLog.entries(table).size == before + 1)
+    assert(IcebergLog.entries(table).count(_._3 == 0) == 1)
+  }
+
   test("v3 initial-default: streaming view materializes the FILLED shape — snapshot + per-commit adds (r17)") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
@@ -504,27 +538,7 @@ class IcebergV3Spec extends SparkSpec {
       Seq((3L, 30L, Some(300L)), (4L, 40L, None: Option[Long]))
         .toDF("id", "v", "bonus").coalesce(1), table)
     // → iceberg-java 1.8 shape: v3 + initial-default/write-default
-    val dir = Paths.get(table, "metadata")
-    val vf = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-      .filter(s => s.startsWith("v") && s.endsWith(".metadata.json"))
-      .map(s => s.stripPrefix("v").stripSuffix(".metadata.json").toInt).max
-    val p = dir.resolve(s"v$vf.metadata.json")
-    val node = mapper.readTree(Files.readAllBytes(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.put("format-version", 3)
-    val curId = node.get("current-schema-id").asInt()
-    val schemas = node.get("schemas")
-    (0 until schemas.size()).map(schemas.get)
-      .find(_.get("schema-id").asInt() == curId).get.get("fields")
-      .forEach { f =>
-        if (f.get("name").asText() == "bonus") {
-          val o = f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          o.put("initial-default", 7)
-          o.put("write-default", 7)
-          ()
-        }
-      }
-    Files.write(p, node.toString.getBytes("UTF-8"))
+    withBonusDefault7(table)
     // the r16 refusal is lifted: the view materializes the snapshot in
     // FILLED shape (the pre-field file's rows carry 7, never null)
     val (sdf, view) = graft.sources.IcebergStreamSource.open(spark, table)
@@ -653,27 +667,7 @@ class IcebergV3Spec extends SparkSpec {
     IcebergLog.setTableProperties(spark, table,
       Map("write.upsert.enabled" -> "true"))
     // → v3 + initial-default/write-default 7 on bonus
-    val dir = Paths.get(table, "metadata")
-    val vf = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-      .filter(s => s.startsWith("v") && s.endsWith(".metadata.json"))
-      .map(s => s.stripPrefix("v").stripSuffix(".metadata.json").toInt).max
-    val p = dir.resolve(s"v$vf.metadata.json")
-    val node = mapper.readTree(Files.readAllBytes(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.put("format-version", 3)
-    val curId = node.get("current-schema-id").asInt()
-    val schemas = node.get("schemas")
-    (0 until schemas.size()).map(schemas.get)
-      .find(_.get("schema-id").asInt() == curId).get.get("fields")
-      .forEach { f =>
-        if (f.get("name").asText() == "bonus") {
-          val o = f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          o.put("initial-default", 7)
-          o.put("write-default", 7)
-          ()
-        }
-      }
-    Files.write(p, node.toString.getBytes("UTF-8"))
+    withBonusDefault7(table)
     // equality upsert keyed on BONUS with the default value: the delete
     // must retract ids 1,2 (their LOGICAL bonus is the fill 7 — the raw
     // bytes have no column at all) and id 4 (explicit 7); id 3 survives
